@@ -1,16 +1,30 @@
-"""LRU bound on the serving-artifact cache (queries._SERVING_INDEXES).
+"""The serving-artifact store (queries._ArtifactStore) and the table catalog.
 
-The driver workload never reaches CAP; these tests exercise the eviction
-machinery directly so the multi-tenant bound is pinned, not just
-documented.
+The registry workload never reaches CAP; the eviction tests drive a small
+store directly so the multi-tenant bound is pinned, not just documented.
+The registry tests pin what the store's keys and view names buy: artifacts
+scoped to their session, and concurrent query construction that cannot
+retarget another corpus's views.
 """
 
 from __future__ import annotations
 
+import gc
+import os
+import shutil
+import sys
+import time
+from concurrent.futures import ThreadPoolExecutor
+
+import duckdb
+
+from vector_database_api_spark import queries as q
 from vector_database_api_spark.queries import (
-    _BoundedServingCache,
+    _ArtifactStore,
+    _artifact,
     _unpersist_artifacts,
 )
+from vector_database_api_spark.sources.tables import load_table
 
 
 def _cached(df) -> bool:
@@ -18,84 +32,118 @@ def _cached(df) -> bool:
     return lvl.useMemory or lvl.useDisk
 
 
-def test_eviction_unpersists_lru_entry(spark):
-    cache = _BoundedServingCache()
-    cache.CAP = 2
-    dfs = []
-    for i in range(3):
-        df = spark.range(10 + i).persist()
+def _store(cap: int) -> _ArtifactStore:
+    store = _ArtifactStore()
+    store.CAP = cap
+    return store
+
+
+def _persisted(spark, n: int):
+    def build():
+        df = spark.range(n).persist()
         df.count()
-        dfs.append(df)
-    cache[("a",)] = dfs[0]
-    cache[("b",)] = dfs[1]
-    assert _cached(dfs[0]) and _cached(dfs[1])
-    cache[("c",)] = dfs[2]  # evicts ("a",), the LRU
-    assert ("a",) not in cache
-    assert not _cached(dfs[0])
-    assert _cached(dfs[1]) and _cached(dfs[2])
-    for df in dfs:
+        return df
+
+    return build
+
+
+def _cached_rdd_ids(spark) -> set[int]:
+    return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+def _checkpoint_rdd_id(df) -> int:
+    return df._jdf.queryExecution().analyzed().rdd().id()
+
+
+def test_eviction_unpersists_lru_entry(spark):
+    store = _store(2)
+    a = store.get((spark, "t", "a", ()), _persisted(spark, 10))
+    b = store.get((spark, "t", "b", ()), _persisted(spark, 11))
+    view_a = store.view((spark, "t", "a", ()), _persisted(spark, 10))
+    assert store.view((spark, "t", "a", ()), _persisted(spark, 10)) == view_a
+    assert store.view((spark, "t", "b", ()), _persisted(spark, 11)) != view_a
+    assert spark.catalog.tableExists(view_a)
+    assert _cached(a) and _cached(b)
+    c = store.get((spark, "t", "c", ()), _persisted(spark, 12))  # evicts a
+    assert (spark, "t", "a", ()) not in store._entries
+    assert not _cached(a) and not spark.catalog.tableExists(view_a)
+    assert _cached(b) and _cached(c)
+    for df in (b, c):
         df.unpersist()
 
 
-def test_eviction_releases_checkpoint_blocks(spark):
-    """r10 verdict item 7: evicting a localCheckpoint-backed artifact
-    (queries._artifact) must free its executor blocks DETERMINISTICALLY
-    — plain unpersist() is a no-op on a checkpointed frame, so before
-    the LogicalRDD release the blocks lingered until the ContextCleaner
-    happened to GC the RDD.  Release is async; poll briefly."""
-    import time
-
-    from vector_database_api_spark.queries import _artifact
-
-    sc = spark.sparkContext
-
-    def cached_rdd_ids() -> set[int]:
-        return {i.id() for i in sc._jsc.sc().getRDDStorageInfo()}
-
-    cache = _BoundedServingCache()
-    cache.CAP = 1
-    art = _artifact(spark.range(100).selectExpr("id", "id * 2 AS y"))
-    rdd_id = art._jdf.queryExecution().analyzed().rdd().id()
-    assert rdd_id in cached_rdd_ids()
-    cache[("x",)] = art
-    cache[("y",)] = spark.range(1).persist()  # evicts ("x",)
-    assert ("x",) not in cache
-    deadline = time.time() + 10
-    while rdd_id in cached_rdd_ids() and time.time() < deadline:
-        time.sleep(0.2)
-    assert rdd_id not in cached_rdd_ids()
-    _unpersist_artifacts(cache[("y",)])
-
-
 def test_read_refreshes_recency(spark):
-    cache = _BoundedServingCache()
-    cache.CAP = 2
-    a = spark.range(1).persist()
-    b = spark.range(2).persist()
-    c = spark.range(3).persist()
-    a.count(), b.count(), c.count()
-    cache[("a",)] = a
-    cache[("b",)] = b
-    _ = cache[("a",)]  # ("b",) becomes the LRU
-    cache[("c",)] = c
-    assert ("a",) in cache and ("b",) not in cache
+    store = _store(2)
+    a = store.get(("a",), _persisted(spark, 1))
+    b = store.get(("b",), _persisted(spark, 2))
+    assert store.get(("a",), _persisted(spark, 9)) is a  # b becomes the LRU
+    c = store.get(("c",), _persisted(spark, 3))
+    assert ("a",) in store._entries and ("b",) not in store._entries
     assert _cached(a) and not _cached(b) and _cached(c)
-    for df in (a, b, c):
+    for df in (a, c):
         df.unpersist()
 
 
 def test_overwrite_existing_key_never_evicts(spark):
-    cache = _BoundedServingCache()
-    cache.CAP = 2
-    a = spark.range(1).persist()
-    b = spark.range(2).persist()
-    a.count(), b.count()
-    cache[("a",)] = a
-    cache[("b",)] = b
-    cache[("b",)] = b  # same key: no eviction
-    assert ("a",) in cache and _cached(a)
+    """A second get of a stored key returns the stored value: it neither
+    rebuilds nor evicts."""
+    store = _store(2)
+    builds = []
+
+    def build():
+        builds.append(1)
+        return _persisted(spark, 2)()
+
+    a = store.get(("a",), _persisted(spark, 1))
+    b = store.get(("b",), build)
+    assert store.get(("b",), build) is b
+    assert len(builds) == 1
+    assert ("a",) in store._entries and _cached(a)
     for df in (a, b):
         df.unpersist()
+
+
+def test_evicted_checkpoint_frame_still_collects(spark):
+    """A caller holding a frame derived from an evicted localCheckpoint
+    artifact can still run it: eviction leaves the checkpoint blocks to
+    the ContextCleaner, which frees them only once no handle is left."""
+    store = _store(1)
+    art = store.get(
+        ("x",), lambda: _artifact(spark.range(100).selectExpr("id", "id * 2 AS y"))
+    )
+    rdd_id = _checkpoint_rdd_id(art)
+    derived = art.filter("y % 4 = 0")
+    store.get(("y",), lambda: spark.range(1))  # evicts ("x",)
+    assert ("x",) not in store._entries
+    deadline = time.time() + 3
+    while rdd_id in _cached_rdd_ids(spark) and time.time() < deadline:
+        spark.sparkContext._jvm.System.gc()
+        time.sleep(0.2)
+    assert derived.count() == 50
+
+
+def test_checkpoint_blocks_released_after_last_handle_dropped(spark):
+    """Once the store has evicted a checkpointed artifact (dropping its
+    view) and the caller drops its last handle, the ContextCleaner frees
+    the blocks after a JVM GC."""
+    store = _store(1)
+    key = (spark, "t", "x", ())
+    view = store.view(
+        key, lambda: _artifact(spark.range(100).selectExpr("id", "id * 2 AS y"))
+    )
+    art = store.get(key, lambda: None)
+    rdd_id = _checkpoint_rdd_id(art)
+    assert rdd_id in _cached_rdd_ids(spark)
+    assert spark.table(view).count() == 100
+    store.get((spark, "t", "y", ()), lambda: spark.range(1))  # evicts key
+    assert not spark.catalog.tableExists(view)
+    del art
+    deadline = time.time() + 30
+    while rdd_id in _cached_rdd_ids(spark) and time.time() < deadline:
+        gc.collect()
+        spark.sparkContext._jvm.System.gc()
+        time.sleep(0.5)
+    assert rdd_id not in _cached_rdd_ids(spark)
 
 
 def test_unpersist_artifacts_handles_tuples_and_index_objects(spark):
@@ -119,9 +167,9 @@ def test_unpersist_artifacts_handles_tuples_and_index_objects(spark):
 
 
 def test_unpersist_artifacts_sweeps_all_dataframe_attributes(spark):
-    """r6 ADVICE regression: a PQIndex-shaped entry persists codes_df
-    (not index_df) — eviction must free EVERY DataFrame-valued attribute
-    of a cached index object, or eviction leaks its blocks."""
+    """A PQIndex-shaped entry persists codes_df (not index_df) — eviction
+    must free EVERY DataFrame-valued attribute of a stored index object,
+    or eviction leaks its blocks."""
     from vector_database_api_spark.operators.pq import PQIndex
 
     codes = spark.range(4).persist()
@@ -131,3 +179,97 @@ def test_unpersist_artifacts_sweeps_all_dataframe_attributes(spark):
     idx.codebooks = {0: [[0.0]]}
     _unpersist_artifacts(idx)
     assert not _cached(codes)
+
+
+def _rows(spark, name: str, sf_dir: str) -> list:
+    return sorted(q.spark_queries()[name](spark, sf_dir).collect())
+
+
+def test_artifacts_are_scoped_to_their_session(spark, sf_dir):
+    """The same queries in a second session of one SparkContext build
+    that session's own artifacts and views, and return the same rows."""
+    names = ("bm25_postings_topk", "ltr_feature_matrix")
+    base = {n: _rows(spark, n, sf_dir) for n in names}
+    other = spark.newSession()
+    for n in names:
+        assert _rows(other, n, sf_dir) == base[n], n
+
+
+def test_concurrent_construction_matches_serial(spark, sf_dir):
+    """Queries over two corpora (sf0.001 and sf0.01) built and collected
+    from threads in one session — artifacts built concurrently, views
+    resolved concurrently — return exactly the serial rows."""
+    names = (
+        "hybrid_batch_rrf_topk",
+        "ir_eval_hybrid_metrics",
+        "ltr_feature_matrix_batch",
+    )
+    sf_dirs = (sf_dir, os.path.join(os.path.dirname(sf_dir), "sf0.01"))
+    jobs = [(n, d) for n in names for d in sf_dirs]
+    serial = {job: _rows(spark, *job) for job in jobs}
+    threaded = spark.newSession()
+    with ThreadPoolExecutor(len(jobs)) as pool:
+        futures = [pool.submit(_rows, threaded, *job) for job in jobs]
+        rows = [f.result(timeout=600) for f in futures]
+    assert dict(zip(jobs, rows)) == serial
+
+
+def test_each_key_builds_once_under_threads():
+    """More threads than cores race on a few keys, one of whose builds
+    nests another key's get: every key builds exactly once and every
+    thread sees the one stored value."""
+    store = _ArtifactStore()
+    builds: dict[str, int] = {}
+
+    def build(name: str):
+        def run():
+            builds[name] = builds.get(name, 0) + 1
+            time.sleep(0.01)
+            if name == "outer":
+                return (store.get(("inner",), build("inner")), object())
+            return object()
+
+        return run
+
+    names = ["outer", "inner", "a", "b"] * 8
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(len(names)) as pool:
+            futures = [pool.submit(store.get, (n,), build(n)) for n in names]
+            got = [f.result(timeout=60) for f in futures]
+    finally:
+        sys.setswitchinterval(old)
+    assert builds == {"outer": 1, "inner": 1, "a": 1, "b": 1}
+    for n, value in zip(names, got):
+        assert value is store.get((n,), build(n))
+    assert store.get(("outer",), build("outer"))[0] is store.get(("inner",), build("inner"))
+
+
+def _empty_corpus(spark, sf_dir: str, tmp_path) -> str:
+    """An sf dir whose documents table is empty (embeddings kept)."""
+    empty_dir = tmp_path / "sf_empty"
+    load_table(spark, sf_dir, "documents").limit(0).write.parquet(
+        str(empty_dir / "documents.parquet")
+    )
+    shutil.copy(f"{sf_dir}/embeddings.parquet", empty_dir / "embeddings.parquet")
+    return str(empty_dir)
+
+
+def test_empty_corpus_matches_oracle(spark, sf_dir, tmp_path):
+    """On an empty documents table the sql()-built postings and LTR
+    queries return the oracle's 0 rows: NULL statistics bind as typed
+    NULL literals, and an empty candidate pool renders no ``IN ()``."""
+    empty_dir = _empty_corpus(spark, sf_dir, tmp_path)
+    duck = duckdb.connect()
+    for t, path in (
+        ("documents", f"{empty_dir}/documents.parquet/*.parquet"),
+        ("embeddings", f"{empty_dir}/embeddings.parquet"),
+    ):
+        duck.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
+    for name in ("bm25_postings_topk", "ltr_feature_matrix"):
+        sdf = q.spark_queries()[name](spark, empty_dir).toPandas()
+        ddf = duck.sql(q.oracle_queries()[name]).df()
+        assert sorted(sdf.columns) == sorted(ddf.columns), name
+        assert len(sdf) == len(ddf) == 0, name
+    assert q._sql_lit(None) == "CAST(NULL AS DOUBLE)"

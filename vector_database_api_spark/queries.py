@@ -12,10 +12,15 @@ Each query's docstring cites the reference behavior it re-expresses
 
 from __future__ import annotations
 
+from collections import OrderedDict
 from collections.abc import Callable
 
+import functools
+import inspect
+import itertools
 import math
 import os
+import threading
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -44,7 +49,12 @@ from vector_database_api_spark.operators import joins as joins_mod
 from vector_database_api_spark.operators import ivf as ivf_mod
 from vector_database_api_spark.operators import lsh as lsh_mod
 from vector_database_api_spark.operators.knn import knn_brute_force
-from vector_database_api_spark.sources.tables import chunks_table, load_table
+from vector_database_api_spark.sources.tables import (
+    chunks_table,
+    load_table,
+    read_table,
+    table_view,
+)
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
 
@@ -101,175 +111,144 @@ def demo_queries() -> dict[str, SparkQuery]:
 
 
 # ---------------------------------------------------------------------------
-# Serving-path index cache.  The reference builds an index once per library
+# Serving-artifact store.  The reference builds an index once per library
 # (POST /libraries/{id}/index) and then serves many searches against it
 # (library_service.py:120-158); rebuilding per query would misrepresent both
-# engines.  Indexes are deterministic (seeded planes / seeded KMeans), so a
-# cached index yields byte-identical results to an inline build — the oracle
-# gate is unaffected, and bench's best-of-2 measures steady-state serving.
+# engines.  Artifacts are deterministic (seeded planes / seeded KMeans), so a
+# stored artifact yields byte-identical results to an inline build — the
+# oracle gate is unaffected, and bench's best-of-2 measures steady-state
+# serving.
 # ---------------------------------------------------------------------------
-
-# Every builder below follows the same pinning discipline: the artifact
-# is FULLY materialized inside whatever pass first touches it (bench's
-# untimed pre-pass runs every query once, so first-build cost can never
-# land inside a timed run).  Since the r10 optimization round most
-# builders materialize via `_artifact` (an eager localCheckpoint — see
-# its docstring: same executor-block storage, but readers plan against a
-# LogicalRDD leaf instead of re-analyzing the full build lineage per
-# run); the ANN cluster stores keep the older persist()+count() form
-# because their readers' join-strategy choice needs InMemoryRelation's
-# actual cached-size statistics (rationale at each site).  Blocks live
-# MEMORY_AND_DISK either way: a memory-pressure eviction spills instead
-# of silently dropping, so a later read can never trigger a rebuild
-# (persist) or a failure (checkpoint).
-
-
-def _release_artifact_blocks(df: DataFrame) -> None:
-    """Deterministically free ONE frame's cached executor blocks,
-    whichever materialization built it: ``unpersist()`` covers
-    persist()-backed artifacts (the ANN cluster stores), and for
-    ``_artifact`` frames — where unpersist() is a documented no-op —
-    the LogicalRDD leaf's checkpoint RDD is unpersisted directly
-    (r10 verdict item 7 / ADVICE: eviction previously freed
-    checkpointed blocks only when the ContextCleaner happened to GC
-    the RDD, so a long-lived multi-corpus process held evicted
-    corpora's blocks nondeterministically).  Release is asynchronous
-    (blocking=False), same as the persist path; pinned by
-    tests/test_serving_cache.py::test_eviction_releases_checkpoint_blocks."""
-    value = df.unpersist()
-    try:
-        plan = value._jdf.queryExecution().analyzed()
-        if plan.getClass().getSimpleName() == "LogicalRDD":
-            plan.rdd().unpersist(False)
-    except Exception:  # noqa: BLE001 — best-effort release, never fail a read
-        pass
 
 
 def _unpersist_artifacts(value: object) -> None:
-    """Unpersist every DataFrame reachable from a cache entry: a bare
+    """Unpersist every DataFrame reachable from a store entry: a bare
     DataFrame, a tuple/list of them (bm25 postings+doclens), or an index
     object carrying them as attributes (IVFIndex.index_df,
-    PQIndex.codes_df, ...).  Index objects are swept over ALL their
-    DataFrame-valued attributes rather than a hardcoded name: a first
-    cut looked only for ``index_df``, so evicting a cached PQIndex
-    leaked its persisted ``codes_df`` blocks (r6 ADVICE).  Non-frame
-    entries (collected statistics rows) have nothing to release."""
+    PQIndex.codes_df, ...) — ALL DataFrame-valued attributes, not one
+    hardcoded name.  Non-frame entries (collected statistics rows) have
+    nothing to release."""
     if isinstance(value, DataFrame):
-        _release_artifact_blocks(value)
+        value.unpersist()
     elif isinstance(value, (tuple, list)):
         for v in value:
             _unpersist_artifacts(v)
-    else:
-        for attr in vars(value) if hasattr(value, "__dict__") else ():
-            if isinstance(getattr(value, attr), DataFrame):
-                _release_artifact_blocks(getattr(value, attr))
+    elif hasattr(value, "__dict__"):
+        for v in vars(value).values():
+            if isinstance(v, DataFrame):
+                v.unpersist()
 
 
-class _BoundedServingCache(dict):
-    """LRU-bounded serving-artifact cache.  The driver workload holds
-    ~15 artifact kinds x 3 sf_dirs, far under CAP, so eviction never
-    fires there — the bound exists for the long-lived multi-tenant
-    shape (many libraries/corpora through one session), where an
-    unbounded dict of persisted DataFrames would pin executor
-    storage forever.  Reads refresh recency; inserting past CAP
-    unpersists and drops the least-recently-used entry (its blocks are
-    freed; a later request transparently rebuilds it).  Eviction must
-    NEVER unpersist a frame another live entry still references —
-    entries are built independently (each persist() call creates its
-    own cache entry), so per-entry unpersist is safe."""
+class _ArtifactStore:
+    """Build-once, LRU-bounded store of serving artifacts, keyed by
+    (SparkSession, kind, sf_dir, params) with defaults applied.
+
+    Every key builds once: one re-entrant lock covers lookup and build
+    (re-entrant because builders nest — the simhash components read the
+    simhash pairs).  Reads refresh recency; past CAP entries the least
+    recently used one is evicted.  The registry workload holds ~15 kinds
+    x 3 sf_dirs, far under CAP; the bound is for the long-lived
+    multi-corpus process, where an unbounded store would pin executor
+    storage forever.  Each artifact's SQL view is registered once, under
+    a name no other entry uses, in the entry's own session.
+
+    Eviction drops the entry's views and unpersists its frames.  That
+    is safe for a caller still holding a frame derived from the entry:
+    persisted frames recompute from lineage, and a checkpointed
+    frame's blocks stay until the ContextCleaner finds no handle left.
+    A view name, unlike a frame, is a handle only until its entry is
+    evicted: readers resolve it in the spark.sql() call right after
+    asking for it.
+
+    Builders choose one of two materializations:
+
+    - ``_artifact`` (eager localCheckpoint) for lineage-heavy artifacts:
+      readers plan against a LogicalRDD leaf instead of re-analyzing the
+      full build lineage on the driver per query (measured 0.3-0.5 s
+      per-run gaps on the artifact-heavy retrieval queries).  Blocks are
+      not replicated and the lineage is gone, so an executor loss fails
+      its readers instead of recomputing — the localCheckpoint trade-off
+      a durable artifact store would remove in production.
+    - ``persist()+count()`` for the kNN-join cluster stores (the semdedup
+      store, the multiprobe probe map, ``_cached_trained_multiprobe``):
+      their readers' join strategy rides on InMemoryRelation's actual
+      cached size, where a LogicalRDD carries the build plan's inflated
+      estimate.  A localCheckpoint'd store turns
+      knn_join_multiprobe_topk's 4 broadcast hash joins into 1 broadcast
+      plus 1 sort-merge join, and its sf0.1 median from 2.25 s to 4.13 s
+      (4 cores).
+
+    Blocks live MEMORY_AND_DISK either way, so memory pressure spills
+    instead of dropping them."""
 
     CAP = 96
+    _names = itertools.count()  # shared: view names are unique per process
 
-    def __getitem__(self, key):  # refresh recency on read
-        value = super().__getitem__(key)
-        super().__delitem__(key)
-        super().__setitem__(key, value)
-        return value
+    def __init__(self) -> None:
+        self._lock = threading.RLock()
+        self._entries: OrderedDict[tuple, object] = OrderedDict()
+        self._views: dict[tuple, dict] = {}  # key -> {part: view name}
 
-    def __setitem__(self, key, value) -> None:
-        if key not in self and len(self) >= self.CAP:
-            oldest = next(iter(self))
-            _unpersist_artifacts(super().pop(oldest))
-        super().__setitem__(key, value)
+    def get(self, key: tuple, build: Callable[[], object]) -> object:
+        with self._lock:
+            if key in self._entries:
+                self._entries.move_to_end(key)
+                return self._entries[key]
+            value = build()
+            self._entries[key] = value
+            while len(self._entries) > self.CAP:
+                self._evict(next(iter(self._entries)))
+            return value
+
+    def view(self, key: tuple, build: Callable[[], object], part=None) -> str:
+        """Temp view over the artifact (or its ``part``-th frame)."""
+        with self._lock:
+            value = self.get(key, build)
+            views = self._views.setdefault(key, {})
+            if part not in views:
+                views[part] = f"_art{next(self._names)}"
+                frame = value if part is None else value[part]
+                frame.createOrReplaceTempView(views[part])
+            return views[part]
+
+    def _evict(self, key: tuple) -> None:
+        value = self._entries.pop(key)
+        for name in self._views.pop(key, {}).values():
+            key[0].catalog.dropTempView(name)
+        _unpersist_artifacts(value)
 
 
-_SERVING_INDEXES: dict[tuple, object] = _BoundedServingCache()
+_STORE = _ArtifactStore()
+
+
+def _served(build):
+    """Serve ``build(spark, sf_dir, *params)`` from _STORE under
+    (spark, build's name, sf_dir, params); ``.view(spark, sf_dir, ...,
+    part=None)`` names the artifact's SQL view."""
+    sig = inspect.signature(build)
+
+    def entry(spark, sf_dir, *args, **kwargs) -> tuple:
+        bound = sig.bind(spark, sf_dir, *args, **kwargs)
+        bound.apply_defaults()
+        params = tuple(bound.arguments.values())[2:]
+        key = (spark, build.__name__, sf_dir, params)
+        return key, lambda: build(spark, sf_dir, *params)
+
+    @functools.wraps(build)
+    def cached(*args, **kwargs):
+        return _STORE.get(*entry(*args, **kwargs))
+
+    def view(*args, part=None, **kwargs) -> str:
+        return _STORE.view(*entry(*args, **kwargs), part)
+
+    cached.view = view
+    return cached
 
 
 def _artifact(df: DataFrame) -> DataFrame:
-    """Materialize a serving artifact AND truncate its lineage (r10
-    optimization round, guide §5 "localCheckpoint is a cheaper way to
-    cut lineage" + §3.3 "very large plans: planning time itself becomes
-    the bottleneck").
-
-    ``persist()+count()`` kept every artifact's FULL build lineage in
-    the returned frame's logical plan, so each query over an artifact
-    re-shipped that tree through analysis, cache-lookup canonicalization
-    and optimization on the DRIVER — measured per-run inter-job gaps of
-    0.3-0.5 s on the artifact-heavy retrieval queries (stage-level
-    profile: ltr_feature_matrix_batch wall 2.2 s vs 0.9 s of actual
-    stage time; its pre-change physical-plan dump was 510 KB / 593
-    Exchange nodes of recursively printed build lineage).  An eager
-    ``localCheckpoint`` stores the same rows as executor blocks (same
-    storage posture and per-process build-once lifecycle — nothing is
-    reused across processes; every run still computes from parquet) but
-    hands back a LogicalRDD leaf, so downstream plans are the
-    steady-state plan ONLY.  Size statistics survive (verified: a
-    checkpointed small side still auto-broadcasts under AQE in 4.1).
-
-    Production posture: a real engine stores these artifacts durably
-    (the TREC run file, the postings store); reading a stored artifact
-    has exactly this no-lineage plan shape.  Trade-off vs persist():
-    blocks are non-replicated and the lineage is GONE, so an executor
-    loss fails artifact readers instead of recomputing — the documented
-    localCheckpoint trade-off (operators/bpe.py), acceptable for
-    serving artifacts that a durable store would back in production.
-    Eviction note (r11): plain unpersist on a checkpointed frame is a
-    no-op, so _BoundedServingCache eviction releases the LogicalRDD
-    leaf's checkpoint RDD explicitly (_release_artifact_blocks) —
-    deterministic block release instead of waiting on the
-    ContextCleaner's GC cycle."""
+    """Materialize a serving artifact with its lineage cut: an eager
+    localCheckpoint (see _ArtifactStore for when a builder uses it)."""
     return df.localCheckpoint(eager=True)
-
-
-_SQL_TABLE_VIEWS: dict[tuple, str] = {}
-
-
-def _sql_ref(spark: SparkSession, sf_dir: str, name: str) -> str:
-    """SQL-text reference to a driver table for single-pass
-    ``spark.sql`` query construction (r11 optimization round, guide §5:
-    every chained Dataset op pays an eager py4j + analyzer round-trip
-    of 50-200 ms on moderate trees — measured 0.5-1.1 s of pure
-    plan-construction time on the ~10-op query bodies; ONE sql() call
-    analyzes the whole tree once).  Each (session, sf_dir, table) is
-    registered ONCE as a temp view over ``load_table``'s frame — the
-    catalog posture every deployment has (a metastore table IS a
-    registered relation): an inline ``parquet.`path``` reference
-    re-runs file listing + footer schema inference per OCCURRENCE per
-    call (measured ~50-60 ms each; data_quality_report references its
-    5 tables 9 times), while view resolution reuses the one analyzed
-    relation.  Scans still read parquet per query — nothing about the
-    data is cached; ``events`` additionally gets load_table's
-    TIMESTAMP(NANOS)->long->timestamp_ntz rebuild this way."""
-    key = (spark, sf_dir, name)
-    view = _SQL_TABLE_VIEWS.get(key)
-    if view is None:
-        view = f"_t_{name}_{abs(hash(sf_dir)) % 10**8}"
-        load_table(spark, sf_dir, name).createOrReplaceTempView(view)
-        _SQL_TABLE_VIEWS[key] = view
-    return view
-
-
-def _sql_ref_df(df: DataFrame, view: str) -> str:
-    """Temp-view SQL reference for an in-memory frame (a serving
-    artifact's LogicalRDD leaf, a collected pool): the sql()-built
-    readers' equivalent of closing over the DataFrame.  Re-registered
-    on every call — registration stores the already-analyzed plan
-    (no re-analysis), and resolution happens inside the subsequent
-    sql() call, so concurrent queries over different sf_dirs cannot
-    retarget each other's resolved plans."""
-    df.createOrReplaceTempView(view)
-    return view
 
 
 def _sql_lit(v) -> str:
@@ -277,7 +256,11 @@ def _sql_lit(v) -> str:
     suffix; a double is bound as CAST('<shortest repr>' AS DOUBLE) —
     Python's repr round-trips the exact double and string->double
     casting is correctly rounded, so the parsed literal is
-    bit-identical to the artifact value it came from."""
+    bit-identical to the artifact value it came from.  None (an empty
+    corpus's avgdl) is a SQL NULL typed DOUBLE, the type an empty
+    aggregate's avg carries."""
+    if v is None:
+        return "CAST(NULL AS DOUBLE)"
     if isinstance(v, bool):
         return "true" if v else "false"
     if isinstance(v, int):
@@ -290,8 +273,8 @@ def _sql_lit(v) -> str:
 def _stats_literal_cols(row: dict) -> str:
     """``<lit> AS <name>, ...`` projection fragment binding a 1-row
     statistics artifact's scalars as literals inside a sql()-built
-    query (r11): the corpus statistics are a maintained artifact either
-    way (the engine holds them in memory next to the postings); binding
+    query: the corpus statistics are a maintained artifact either way
+    (the engine holds them in memory next to the postings); binding
     them as literals instead of CROSS JOIN BROADCAST removes one AQE
     broadcast-materialization stage (~50-100 ms of per-request latency)
     and lets the scoring expression constant-fold its idf terms — same
@@ -300,44 +283,36 @@ def _stats_literal_cols(row: dict) -> str:
     return ", ".join(f"{_sql_lit(v)} AS {k}" for k, v in row.items())
 
 
+@_served
 def _cached_stats_row(spark: SparkSession, sf_dir: str, which: str) -> dict:
     """The 1-row statistics artifact's scalars as a plain dict, collected
-    ONCE per (artifact, sf_dir) alongside the artifact itself (same
-    build-once/serve-many lifecycle — the collect happens inside
-    whatever pass first touches the artifact, i.e. bench's untimed
-    pre-pass), for literal binding via _stats_literal_cols."""
-    key = (which + "-row", sf_dir)
-    if key not in _SERVING_INDEXES:
-        src = {
-            "bm25-stats": _cached_bm25_stats,
-            "ql-stats": _cached_ql_stats,
-        }[which]
-        _SERVING_INDEXES[key] = src(spark, sf_dir).collect()[0].asDict()
-    return _SERVING_INDEXES[key]
+    once alongside the artifact itself, for literal binding via
+    _stats_literal_cols."""
+    src = {
+        "bm25-stats": _cached_bm25_stats,
+        "ql-stats": _cached_ql_stats,
+    }[which]
+    return src(spark, sf_dir).collect()[0].asDict()
 
 
+@_served
 def _cached_lsh_index(spark: SparkSession, sf_dir: str, library: str) -> DataFrame:
     from vector_database_api_spark.operators.filters import library_scope
 
-    key = ("lsh", sf_dir, library)
-    if key not in _SERVING_INDEXES:
-        scoped = library_scope(chunks_table(spark, sf_dir), library).filter(
-            F.col("embedding").isNotNull()
-        )
-        idx = _artifact(lsh_mod.hash_table_df(scoped, _PLANES))
-        _SERVING_INDEXES[key] = idx
-    return _SERVING_INDEXES[key]
+    scoped = library_scope(chunks_table(spark, sf_dir), library).filter(
+        F.col("embedding").isNotNull()
+    )
+    return _artifact(lsh_mod.hash_table_df(scoped, _PLANES))
 
 
+@_served
 def _cached_ivf_index(spark: SparkSession, sf_dir: str):
-    key = ("ivf", sf_dir)
-    if key not in _SERVING_INDEXES:
-        index = ivf_mod.build_ivf(chunks_table(spark, sf_dir))
-        index.index_df = _artifact(index.index_df)
-        _SERVING_INDEXES[key] = index
-    return _SERVING_INDEXES[key]
+    index = ivf_mod.build_ivf(chunks_table(spark, sf_dir))
+    index.index_df = _artifact(index.index_df)
+    return index
 
 
+@_served
 def _cached_minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(id, shingles, sig) MinHash signature table, persisted once per
     sf_dir — the signature table IS the index a MinHash dedup pipeline
@@ -346,75 +321,64 @@ def _cached_minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Before this cache, `minhash_near_dup` and `cross_source_contamination`
     each rebuilt shingles + signatures from the raw corpus per call (the
     4.6 s bench tail of round 3)."""
-    key = ("minhash-sigs", sf_dir)
-    if key not in _SERVING_INDEXES:
-        docs = load_table(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism
-        )
-        sigs = _artifact(dedup_mod.minhash_signatures(docs))
-        _SERVING_INDEXES[key] = sigs
-    return _SERVING_INDEXES[key]
+    docs = load_table(spark, sf_dir, "documents").repartition(
+        spark.sparkContext.defaultParallelism
+    )
+    return _artifact(dedup_mod.minhash_signatures(docs))
 
 
+@_served
 def _cached_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pair edges, persisted once per sf_dir — the pair
     graph is the shared upstream artifact of the simhash/near-dup query
     family (pairs -> components -> keep decision), exactly as a real dedup
     pipeline materializes signatures/pairs once and derives decisions from
     them.  Deterministic, so the oracle gate is unaffected."""
-    key = ("simhash-pairs", sf_dir)
-    if key not in _SERVING_INDEXES:
-        docs = load_table(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism
+    docs = load_table(spark, sf_dir, "documents").repartition(
+        spark.sparkContext.defaultParallelism
+    )
+    sigs = dedup_mod.simhash(docs).persist()
+    sigs.count()
+    pairs = _artifact(
+        dedup_mod.simhash_near_dup_pairs(
+            docs, bands=4, max_hamming=3, sigs=sigs
         )
-        sigs = dedup_mod.simhash(docs).persist()
-        sigs.count()
-        pairs = _artifact(
-            dedup_mod.simhash_near_dup_pairs(
-                docs, bands=4, max_hamming=3, sigs=sigs
-            )
-        )
-        sigs.unpersist()
-        _SERVING_INDEXES[key] = pairs
-    return _SERVING_INDEXES[key]
+    )
+    sigs.unpersist()
+    return pairs
 
 
+@_served
 def _cached_simhash_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the cached pair graph (pairs ->
     clusters), persisted once — the second shared artifact of the dedup
     family."""
-    key = ("simhash-comp", sf_dir)
-    if key not in _SERVING_INDEXES:
-        comp = _artifact(
-            dedup_mod.connected_components(_cached_simhash_pairs(spark, sf_dir))
-        )
-        _SERVING_INDEXES[key] = comp
-    return _SERVING_INDEXES[key]
+    return _artifact(
+        dedup_mod.connected_components(_cached_simhash_pairs(spark, sf_dir))
+    )
 
 
+@_served
 def _cached_word_shingles(spark: SparkSession, sf_dir: str, n: int = 3) -> DataFrame:
     """(id, source, shingles) word-n-gram table, persisted once per
     sf_dir — the signature artifact of the n-gram Jaccard dedup path,
     materialized the way a real pipeline stages shingles before pair
     generation."""
-    key = ("word-shingles", sf_dir, n)
-    if key not in _SERVING_INDEXES:
-        docs = load_table(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism
+    docs = load_table(spark, sf_dir, "documents").repartition(
+        spark.sparkContext.defaultParallelism
+    )
+    sh = (
+        docs.select(
+            F.col("doc_id").alias("id"),
+            "source",
+            text_fns.word_shingles_udf(n)(F.col("text")).alias("shingles"),
         )
-        sh = (
-            docs.select(
-                F.col("doc_id").alias("id"),
-                "source",
-                text_fns.word_shingles_udf(n)(F.col("text")).alias("shingles"),
-            )
-            .filter(F.size("shingles") > 0)
-        )
-        sh = _artifact(sh)
-        _SERVING_INDEXES[key] = sh
-    return _SERVING_INDEXES[key]
+        .filter(F.size("shingles") > 0)
+    )
+    return _artifact(sh)
 
 
+@_served
 def _cached_semdedup_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(id, v, cluster_id) nearest-frozen-centroid assignment, persisted
     once per sf_dir — the cluster map is the stored artifact of the
@@ -424,36 +388,34 @@ def _cached_semdedup_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment subtree (crossJoin + min-struct + join) twice each."""
     from vector_database_api_spark.operators import dedup as ded
 
-    key = ("semdedup-assign", sf_dir)
-    if key not in _SERVING_INDEXES:
-        embs = load_table(spark, sf_dir, "embeddings")
-        cents = embs.filter(F.col("vec_id") < 20).select(
-            F.col("vec_id").alias("cluster_id"),
-            F.col("embedding").alias("cvec"),
+    embs = load_table(spark, sf_dir, "embeddings")
+    cents = embs.filter(F.col("vec_id") < 20).select(
+        F.col("vec_id").alias("cluster_id"),
+        F.col("embedding").alias("cvec"),
+    )
+    assigned = ded.assign_clusters(embs, cents, id_col="vec_id")
+    wc = (
+        embs.select(
+            F.col("vec_id").alias("id"), F.col("embedding").alias("v")
         )
-        assigned = ded.assign_clusters(embs, cents, id_col="vec_id")
-        wc = (
-            embs.select(
-                F.col("vec_id").alias("id"), F.col("embedding").alias("v")
-            )
-            .join(assigned, "id")
-            # persist (NOT _artifact): this store is joined on
-            # cluster_id by the knn-join family, where the planner's
-            # build-side choice rides on artifact size statistics —
-            # InMemoryRelation reports the ACTUAL cached bytes, while a
-            # lineage-truncated LogicalRDD carries the build plan's
-            # static estimate (a crossJoin+window tree, wildly
-            # inflated), which measured as a BHJ->SMJ flip and a
-            # 3-5x regression on knn_join_multiprobe_topk.  The build
-            # lineage here is one shallow join — the _artifact driver-
-            # latency rationale doesn't bite.
-            .persist()
-        )
-        wc.count()
-        _SERVING_INDEXES[key] = wc
-    return _SERVING_INDEXES[key]
+        .join(assigned, "id")
+        # persist (NOT _artifact): this store is joined on
+        # cluster_id by the knn-join family, where the planner's
+        # build-side choice rides on artifact size statistics —
+        # InMemoryRelation reports the ACTUAL cached bytes, while a
+        # lineage-truncated LogicalRDD carries the build plan's
+        # static estimate (a crossJoin+window tree, wildly
+        # inflated), which measured as a BHJ->SMJ flip and a
+        # 3-5x regression on knn_join_multiprobe_topk.  The build
+        # lineage here is one shallow join — the _artifact driver-
+        # latency rationale doesn't bite.
+        .persist()
+    )
+    wc.count()
+    return wc
 
 
+@_served
 def _cached_sq8_index(spark: SparkSession, sf_dir: str):
     """(codes_df, bounds_df): the SQ8 serving artifact — int codes for
     every vector plus the 1-row per-dim (vmins, vmaxs) bounds — persisted
@@ -462,40 +424,37 @@ def _cached_sq8_index(spark: SparkSession, sf_dir: str):
     (min/max training), so the oracle gate is unaffected."""
     from vector_database_api_spark.operators import sq as sq_mod
 
-    key = ("sq8", sf_dir)
-    if key not in _SERVING_INDEXES:
-        embs = load_table(spark, sf_dir, "embeddings")
-        target = spark.sparkContext.defaultParallelism
-        if embs.rdd.getNumPartitions() < target:
-            embs = embs.repartition(target)
-        rows = embs.select(
-            "vec_id", "embedding", vec_norm2("embedding").alias("n2")
-        ).select(
-            "vec_id", normalize_with_staged_norm("embedding", "n2").alias("nv")
+    embs = load_table(spark, sf_dir, "embeddings")
+    target = spark.sparkContext.defaultParallelism
+    if embs.rdd.getNumPartitions() < target:
+        embs = embs.repartition(target)
+    rows = embs.select(
+        "vec_id", "embedding", vec_norm2("embedding").alias("n2")
+    ).select(
+        "vec_id", normalize_with_staged_norm("embedding", "n2").alias("nv")
+    )
+    bounds = (
+        sq_mod.dim_stats(rows, "nv")
+        .agg(
+            F.array_sort(
+                F.collect_list(F.struct("i", "vmin", "vmax"))
+            ).alias("s")
         )
-        bounds = (
-            sq_mod.dim_stats(rows, "nv")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("i", "vmin", "vmax"))
-                ).alias("s")
-            )
-            .select(
-                F.transform("s", lambda s: s["vmin"]).alias("vmins"),
-                F.transform("s", lambda s: s["vmax"]).alias("vmaxs"),
-            )
+        .select(
+            F.transform("s", lambda s: s["vmin"]).alias("vmins"),
+            F.transform("s", lambda s: s["vmax"]).alias("vmaxs"),
         )
-        bounds = _artifact(bounds)
-        codes = _artifact(
-            rows.crossJoin(F.broadcast(bounds)).select(
-                "vec_id",
-                sq_mod.encode_expr(
-                    F.col("nv"), F.col("vmins"), F.col("vmaxs")
-                ).alias("codes"),
-            )
+    )
+    bounds = _artifact(bounds)
+    codes = _artifact(
+        rows.crossJoin(F.broadcast(bounds)).select(
+            "vec_id",
+            sq_mod.encode_expr(
+                F.col("nv"), F.col("vmins"), F.col("vmaxs")
+            ).alias("codes"),
         )
-        _SERVING_INDEXES[key] = (codes, bounds)
-    return _SERVING_INDEXES[key]
+    )
+    return (codes, bounds)
 
 
 # ---------------------------------------------------------------------------
@@ -3279,8 +3238,8 @@ def q13_custdist(spark: SparkSession, sf_dir: str) -> DataFrame:
     (customers with zero qualifying orders must survive with count 0),
     then a second aggregation over the first's result — the canonical
     'distribution of group sizes' query."""
-    cust = load_table(spark, sf_dir, "customer")
-    orders = load_table(spark, sf_dir, "orders").filter(
+    cust = read_table(spark, sf_dir, "customer")
+    orders = read_table(spark, sf_dir, "orders").filter(
         F.col("o_orderpriority") != "1-URGENT"
     )
     per_cust = (
@@ -3424,16 +3383,14 @@ def q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 from vector_database_api_spark.operators import pq as pq_mod  # noqa: E402
 
 
+@_served
 def _cached_pq_index(spark: SparkSession, sf_dir: str):
-    key = ("pq", sf_dir)
-    if key not in _SERVING_INDEXES:
-        embs = load_table(spark, sf_dir, "embeddings").select(
-            F.col("vec_id").cast("string").alias("id"), "embedding"
-        )
-        index = pq_mod.build_pq(embs, m=8, k=16, seed=42)
-        index.codes_df = _artifact(index.codes_df)
-        _SERVING_INDEXES[key] = index
-    return _SERVING_INDEXES[key]
+    embs = load_table(spark, sf_dir, "embeddings").select(
+        F.col("vec_id").cast("string").alias("id"), "embedding"
+    )
+    index = pq_mod.build_pq(embs, m=8, k=16, seed=42)
+    index.codes_df = _artifact(index.codes_df)
+    return index
 
 
 @register_demo("pq_search_topk")
@@ -3479,16 +3436,14 @@ def ivfpq_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_served
 def _cached_ivf_index_embeddings(spark: SparkSession, sf_dir: str):
-    key = ("ivf-embs", sf_dir)
-    if key not in _SERVING_INDEXES:
-        embs = load_table(spark, sf_dir, "embeddings").select(
-            F.col("vec_id").cast("string").alias("id"), "embedding"
-        )
-        index = ivf_mod.build_ivf(embs)
-        index.index_df = _artifact(index.index_df)
-        _SERVING_INDEXES[key] = index
-    return _SERVING_INDEXES[key]
+    embs = load_table(spark, sf_dir, "embeddings").select(
+        F.col("vec_id").cast("string").alias("id"), "embedding"
+    )
+    index = ivf_mod.build_ivf(embs)
+    index.index_df = _artifact(index.index_df)
+    return index
 
 
 @register(
@@ -4910,13 +4865,12 @@ def date_spine_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     complete calendar so missing days surface as explicit zeros.  The
     spine is O(days) rows on one task; the join broadcasts it — the big
     side never shuffles."""
-    events = load_table(spark, sf_dir, "events")
-    events.createOrReplaceTempView("events_gapfill_src")
+    events = table_view(spark, sf_dir, "events")
     return spark.sql(
-        """
+        f"""
         WITH RECURSIVE bounds AS (
           SELECT min(CAST(ts AS DATE)) AS mn, max(CAST(ts AS DATE)) AS mx
-          FROM events_gapfill_src
+          FROM {events}
         ),
         spine(day, mx) AS (
           SELECT mn, mx FROM bounds
@@ -4926,7 +4880,7 @@ def date_spine_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
         daily AS (
           SELECT CAST(ts AS DATE) AS day, count(*) AS n_events,
                  round(sum(value), 4) AS sum_value
-          FROM events_gapfill_src
+          FROM {events}
           WHERE event_type = 'purchase' AND user_id % 7 = 3
           GROUP BY 1
         )
@@ -5069,13 +5023,11 @@ def udtf_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
                 i += stride
 
     spark.udtf.register("chunk_udtf", ChunkUDTF)
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "udtf_chunk_docs_src"
-    )
+    docs = table_view(spark, sf_dir, "documents")
     return spark.sql(
-        """
+        f"""
         SELECT d.doc_id, c.chunk_idx, c.chunk
-        FROM udtf_chunk_docs_src d, LATERAL chunk_udtf(d.text) c
+        FROM {docs} d, LATERAL chunk_udtf(d.text) c
         WHERE d.doc_id < 200
         """
     )
@@ -5099,13 +5051,13 @@ def lateral_top_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFra
     surface).  Catalyst decorrelates the lateral into a ranked join, so
     execution is one shuffle on the correlation key — identical row
     semantics on DuckDB, which plans LATERAL natively."""
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("lat_cust_src")
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("lat_ord_src")
+    cust = table_view(spark, sf_dir, "customer")
+    orders = table_view(spark, sf_dir, "orders")
     return spark.sql(
-        """
+        f"""
         SELECT c.c_custkey, o.o_orderkey, o.o_totalprice
-        FROM lat_cust_src c, LATERAL (
-          SELECT o_orderkey, o_totalprice FROM lat_ord_src o
+        FROM {cust} c, LATERAL (
+          SELECT o_orderkey, o_totalprice FROM {orders} o
           WHERE o.o_custkey = c.c_custkey
           ORDER BY o_totalprice DESC, o_orderkey LIMIT 2) o
         WHERE c.c_custkey < 500
@@ -5643,7 +5595,7 @@ def window_dedup_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _classifier_sql(engine: str) -> str:
+def _classifier_sql(engine: str, table: str = "documents") -> str:
     """Model-based quality classifier (the CCNet/GPT-3 fasttext-filter
     stage, here a fixed linear model over the engine's text features):
     z = w·f, squashed by the ALGEBRAIC sigmoid 0.5 + 0.5*z/(1+|z|) —
@@ -5654,12 +5606,10 @@ def _classifier_sql(engine: str) -> str:
         n_tok = text_fns.spark_token_count("text")
         qual = text_fns.spark_quality_score("text")
         lang = text_fns.spark_lang_id("text")
-        table = "documents_cls"
     else:
         n_tok = text_fns.duck_token_count("text")
         qual = text_fns.duck_quality_score("text")
         lang = text_fns.duck_lang_id("text")
-        table = "documents"
     z = (
         f"(-1.5 + 0.003 * CAST({n_tok} AS DOUBLE) + 2.0 * {qual}"
         f" + 0.5 * (CASE WHEN {lang} = 'en' THEN 1.0 ELSE 0.0 END))"
@@ -5682,9 +5632,9 @@ def quality_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     weights stand in for a trained model; the FEATURE PLUMBING and the
     scan-speed scoring expression are the engine surface, and the whole
     expression is bit-exact vs DuckDB (algebraic sigmoid, no exp)."""
-    docs = load_table(spark, sf_dir, "documents")
-    docs.createOrReplaceTempView("documents_cls")
-    return spark.sql(_classifier_sql("spark"))
+    return spark.sql(
+        _classifier_sql("spark", table_view(spark, sf_dir, "documents"))
+    )
 
 
 @register(
@@ -5784,36 +5734,35 @@ def _cached_boilerplate_lexicon(
       boilerplate discovery, min_count ~ 0.1% of corpus tokens).  With
       k over the broadcast item limit the verify semi-join runs as a
       shuffle join, never an O(n) broadcast (advisor round-3 finding)."""
-    import os as _os
+    method = method or os.environ.get("SPARK_GRAFT_BOILER_METHOD", "exact")
+    return _boilerplate_lexicon(spark, sf_dir, method)
 
-    method = method or _os.environ.get("SPARK_GRAFT_BOILER_METHOD", "exact")
-    key = ("boiler-lexicon", sf_dir, method)
-    if key not in _SERVING_INDEXES:
-        sh = _cached_word_shingles(spark, sf_dir, 3)
-        ex = sh.select(F.explode("shingles").alias("shingle"))
-        if method == "mg":
-            from vector_database_api_spark.operators.frequency import (
-                frequent_items_two_pass,
-            )
 
-            # size k from corpus stats so the MG superset guarantee
-            # (min_count > n/k) holds: k > n / threshold, padded 2x
-            n = ex.count()
-            k = max(1024, int(2 * n / _BOILER_DF))
-            lex = frequent_items_two_pass(
-                ex, "shingle", min_count=_BOILER_DF, k=k
-            ).select(F.col("item").alias("shingle"), F.col("n").alias("n_docs"))
-        elif method == "exact":
-            lex = (
-                ex.groupBy("shingle")
-                .agg(F.count(F.lit(1)).alias("n_docs"))
-                .filter(F.col("n_docs") >= _BOILER_DF)
-            )
-        else:
-            raise ValueError(f"unknown lexicon method: {method}")
-        lex = _artifact(lex)
-        _SERVING_INDEXES[key] = lex
-    return _SERVING_INDEXES[key]
+@_served
+def _boilerplate_lexicon(spark: SparkSession, sf_dir: str, method: str) -> DataFrame:
+    sh = _cached_word_shingles(spark, sf_dir, 3)
+    ex = sh.select(F.explode("shingles").alias("shingle"))
+    if method == "mg":
+        from vector_database_api_spark.operators.frequency import (
+            frequent_items_two_pass,
+        )
+
+        # size k from corpus stats so the MG superset guarantee
+        # (min_count > n/k) holds: k > n / threshold, padded 2x
+        n = ex.count()
+        k = max(1024, int(2 * n / _BOILER_DF))
+        lex = frequent_items_two_pass(
+            ex, "shingle", min_count=_BOILER_DF, k=k
+        ).select(F.col("item").alias("shingle"), F.col("n").alias("n_docs"))
+    elif method == "exact":
+        lex = (
+            ex.groupBy("shingle")
+            .agg(F.count(F.lit(1)).alias("n_docs"))
+            .filter(F.col("n_docs") >= _BOILER_DF)
+        )
+    else:
+        raise ValueError(f"unknown lexicon method: {method}")
+    return _artifact(lex)
 
 
 @register(
@@ -6447,42 +6396,39 @@ def knn_join_blocked_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_served
 def _cached_gram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(kind, gram, c) corpus uni+bigram counts, persisted once per
     sf_dir — one explode, one map-side-combined shuffle."""
-    key = ("gram-counts", sf_dir)
-    if key not in _SERVING_INDEXES:
-        docs = (
-            load_table(spark, sf_dir, "documents")
-            .select(F.split(F.lower("text"), " ", -1).alias("words"))
-            .filter(F.size("words") >= 2)
-        )
-        grams = docs.select(
-            F.explode(
-                F.expr(
-                    "concat("
-                    " transform(words, w -> struct('w' AS kind, w AS gram)),"
-                    " transform(sequence(2, size(words)),"
-                    "   i -> struct('b' AS kind,"
-                    "               concat(words[i-2], ' ', words[i-1]) AS gram)))"
-                )
-            ).alias("g")
-        ).select(F.col("g.kind").alias("kind"), F.col("g.gram").alias("gram"))
-        # drop empty tokens: bare '' unigrams; bigrams with an empty side
-        # start or end with the separator space (tokens cannot contain one)
-        grams = grams.filter(
-            ((F.col("kind") == "w") & (F.col("gram") != ""))
-            | (
-                (F.col("kind") == "b")
-                & ~F.col("gram").startswith(" ")
-                & ~F.col("gram").endswith(" ")
+    docs = (
+        load_table(spark, sf_dir, "documents")
+        .select(F.split(F.lower("text"), " ", -1).alias("words"))
+        .filter(F.size("words") >= 2)
+    )
+    grams = docs.select(
+        F.explode(
+            F.expr(
+                "concat("
+                " transform(words, w -> struct('w' AS kind, w AS gram)),"
+                " transform(sequence(2, size(words)),"
+                "   i -> struct('b' AS kind,"
+                "               concat(words[i-2], ' ', words[i-1]) AS gram)))"
             )
+        ).alias("g")
+    ).select(F.col("g.kind").alias("kind"), F.col("g.gram").alias("gram"))
+    # drop empty tokens: bare '' unigrams; bigrams with an empty side
+    # start or end with the separator space (tokens cannot contain one)
+    grams = grams.filter(
+        ((F.col("kind") == "w") & (F.col("gram") != ""))
+        | (
+            (F.col("kind") == "b")
+            & ~F.col("gram").startswith(" ")
+            & ~F.col("gram").endswith(" ")
         )
-        gc = _artifact(
-            grams.groupBy("kind", "gram").agg(F.count(F.lit(1)).alias("c"))
-        )
-        _SERVING_INDEXES[key] = gc
-    return _SERVING_INDEXES[key]
+    )
+    return _artifact(
+        grams.groupBy("kind", "gram").agg(F.count(F.lit(1)).alias("c"))
+    )
 
 
 @register(
@@ -6820,20 +6766,7 @@ def knn_join_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     store = _cached_semdedup_assignment(spark, sf_dir)  # (id, v, cluster_id)
     # the probe map is an index artifact like the storage assignment —
     # computed once per sf_dir and served (bench measures steady state)
-    key = ("multiprobe-assign", sf_dir)
-    if key not in _SERVING_INDEXES:
-        cents = embs.filter(F.col("vec_id") < 20).select(
-            F.col("vec_id").alias("cluster_id"),
-            F.col("embedding").alias("cvec"),
-        )
-        # persist, not _artifact — same stats rationale as the
-        # semdedup store (the probe map is this join family's build side)
-        pr = dedup_mod.assign_clusters_topp(
-            embs, cents, p=2, id_col="vec_id"
-        ).persist()
-        pr.count()
-        _SERVING_INDEXES[key] = pr
-    probes = _SERVING_INDEXES[key]
+    probes = _cached_multiprobe_assignment(spark, sf_dir)
     sn = store.select(
         F.col("id").alias("nid"),
         F.col("v").alias("nv"),
@@ -6865,6 +6798,24 @@ def knn_join_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_served
+def _cached_multiprobe_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(id, cluster_id, probe_rank) top-2 frozen-centroid probe map of
+    `knn_join_multiprobe_topk`; persist, not _artifact — it is this join
+    family's build side (_ArtifactStore)."""
+    embs = load_table(spark, sf_dir, "embeddings")
+    cents = embs.filter(F.col("vec_id") < 20).select(
+        F.col("vec_id").alias("cluster_id"),
+        F.col("embedding").alias("cvec"),
+    )
+    pr = dedup_mod.assign_clusters_topp(
+        embs, cents, p=2, id_col="vec_id"
+    ).persist()
+    pr.count()
+    return pr
+
+
+@_served
 def _cached_trained_multiprobe(
     spark: SparkSession, sf_dir: str, k: int = 20, p: int = 4
 ) -> tuple[DataFrame, DataFrame]:
@@ -6879,42 +6830,39 @@ def _cached_trained_multiprobe(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    key = ("trained-multiprobe", sf_dir, k, p)
-    if key not in _SERVING_INDEXES:
-        embs = load_table(spark, sf_dir, "embeddings")
-        km_in = embs.select(
-            array_to_vector(F.col("embedding").cast("array<double>")).alias(
-                "features"
-            )
+    embs = load_table(spark, sf_dir, "embeddings")
+    km_in = embs.select(
+        array_to_vector(F.col("embedding").cast("array<double>")).alias(
+            "features"
         )
-        km = KMeans(k=k, seed=42, maxIter=10).fit(km_in)
-        cents = spark.createDataFrame(
-            [
-                (int(i), [float(x) for x in c])
-                for i, c in enumerate(km.clusterCenters())
-            ],
-            "cluster_id int, cvec array<double>",
+    )
+    km = KMeans(k=k, seed=42, maxIter=10).fit(km_in)
+    cents = spark.createDataFrame(
+        [
+            (int(i), [float(x) for x in c])
+            for i, c in enumerate(km.clusterCenters())
+        ],
+        "cluster_id int, cvec array<double>",
+    )
+    assigned = dedup_mod.assign_clusters(embs, cents, id_col="vec_id")
+    store = (
+        embs.select(
+            F.col("vec_id").alias("id"), F.col("embedding").alias("v")
         )
-        assigned = dedup_mod.assign_clusters(embs, cents, id_col="vec_id")
-        store = (
-            embs.select(
-                F.col("vec_id").alias("id"), F.col("embedding").alias("v")
-            )
-            .join(assigned, "id")
-            .select("id", "v", "cluster_id", vec_norm2("v").alias("nn2"))
-            # persist, not _artifact — stats rationale on the
-            # semdedup store above (cluster_id join build-side choice)
-            .persist()
-        )
-        store.count()
-        probes = (
-            dedup_mod.assign_clusters_topp(embs, cents, p=p, id_col="vec_id")
-            .select("id", "cluster_id")
-            .persist()
-        )
-        probes.count()
-        _SERVING_INDEXES[key] = (store, probes)
-    return _SERVING_INDEXES[key]
+        .join(assigned, "id")
+        .select("id", "v", "cluster_id", vec_norm2("v").alias("nn2"))
+        # persist, not _artifact — stats rationale on the
+        # semdedup store above (cluster_id join build-side choice)
+        .persist()
+    )
+    store.count()
+    probes = (
+        dedup_mod.assign_clusters_topp(embs, cents, p=p, id_col="vec_id")
+        .select("id", "cluster_id")
+        .persist()
+    )
+    probes.count()
+    return (store, probes)
 
 
 @register_demo("knn_join_trained_multiprobe")
@@ -6997,18 +6945,15 @@ def cross_source_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 from vector_database_api_spark.operators import bpe as bpe_mod  # noqa: E402
 
 
+@_served
 def _cached_span_occ(spark: SparkSession, sf_dir: str, w: int = 8) -> DataFrame:
     """(span, id, grp, occ) span occurrence table, persisted once per
     sf_dir — the stored artifact of a span-dedup pipeline (the analogue
     of the MinHash signature table): the window explode and the
     (span, doc) collapse are paid once, and both span queries are
     cheap derivations over it."""
-    key = ("span-occ", sf_dir, w)
-    if key not in _SERVING_INDEXES:
-        docs = load_table(spark, sf_dir, "documents")
-        occ = _artifact(dedup_mod.span_occurrences(docs, w=w))
-        _SERVING_INDEXES[key] = occ
-    return _SERVING_INDEXES[key]
+    docs = load_table(spark, sf_dir, "documents")
+    return _artifact(dedup_mod.span_occurrences(docs, w=w))
 
 
 @register(
@@ -7045,20 +6990,17 @@ def span_dedup_hot_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_served
 def _cached_bpe_wf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(word, cnt) corpus word-frequency table, persisted once per
     sf_dir — the stored artifact of a tokenizer-training service (like
     the PMI gram counts); BPE rounds are query-time derivations over it,
     and without the cache every unrolled round branch would re-scan the
     corpus."""
-    key = ("bpe-wf", sf_dir)
-    if key not in _SERVING_INDEXES:
-        docs = load_table(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism
-        )
-        wf = _artifact(bpe_mod.word_frequencies(docs))
-        _SERVING_INDEXES[key] = wf
-    return _SERVING_INDEXES[key]
+    docs = load_table(spark, sf_dir, "documents").repartition(
+        spark.sparkContext.defaultParallelism
+    )
+    return _artifact(bpe_mod.word_frequencies(docs))
 
 
 @register(
@@ -7382,17 +7324,17 @@ def data_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     NOT IN) so a NULL FK row counts as a violation on both engines,
     matching Spark's left_anti semantics.
 
-    Built as ONE sql() string (r11, guide §5 / _sql_ref): the chained
+    Built as ONE sql() string (r11, guide §5 / table_view): the chained
     form's 7 aggregates + 2 anti-joins + 6 unions + sort staged ~18
     eagerly-analyzed Dataset ops, measured 0.60 s of per-run plan
     construction — the largest remaining analysis floor after the ltr
     family.  Identical per-table multi-expression aggregates, stack
     unpivots, and broadcast LEFT ANTI joins."""
-    cust = _sql_ref(spark, sf_dir, "customer")
-    orders = _sql_ref(spark, sf_dir, "orders")
-    li = _sql_ref(spark, sf_dir, "lineitem")
-    docs = _sql_ref(spark, sf_dir, "documents")
-    emb = _sql_ref(spark, sf_dir, "embeddings")
+    cust = table_view(spark, sf_dir, "customer")
+    orders = table_view(spark, sf_dir, "orders")
+    li = table_view(spark, sf_dir, "lineitem")
+    docs = table_view(spark, sf_dir, "documents")
+    emb = table_view(spark, sf_dir, "embeddings")
 
     def unpivot(entity: str, agg_sql: str, metrics: list[str]) -> str:
         pairs = ", ".join(f"'{m}', `{m}`" for m in metrics)
@@ -7552,8 +7494,7 @@ def lm_cross_entropy_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     # build_bigram_lm_artifact` is the durable twin); deterministic, so
     # the oracle is unaffected, and repeat queries skip the training
     # aggregates entirely
-    lm_key = ("bigram-lm", sf_dir)
-    if lm_key not in _SERVING_INDEXES:
+    def build_lm():
         fact_p = _artifact(fact)
         lm_src = fact_p.filter(F.col("source") == "src0")
         u = _artifact(
@@ -7565,10 +7506,11 @@ def lm_cross_entropy_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
             lm_src.groupBy("bg").agg(F.count(F.lit(1)).alias("c2"))
         )
         # the exploded bigram fact is ALSO the scoring input — keep it
-        # materialized (the dsir featurize-once discipline, r8) so later
+        # materialized (the dsir featurize-once discipline) so later
         # scoring passes skip the per-call corpus explode
-        _SERVING_INDEXES[lm_key] = (u, b, fact_p)
-    lm_uni, lm_big, fact = _SERVING_INDEXES[lm_key]
+        return (u, b, fact_p)
+
+    lm_uni, lm_big, fact = _STORE.get((spark, "bigram-lm", sf_dir, ()), build_lm)
     vocab = lm_uni.agg(F.count(F.lit(1)).alias("v"))
     scored = (
         fact.join(lm_big, "bg", "left")
@@ -7646,16 +7588,16 @@ def join_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     acctbal_percentiles precedent (shared p*(n-1) interpolation).
 
     Built as ONE sql() string (r11 optimization round, guide §5 /
-    _sql_ref): the chained form staged 4 x (groupBy + 6-column agg) + 3
+    table_view): the chained form staged 4 x (groupBy + 6-column agg) + 3
     unions + sort = ~12 eagerly-analyzed Dataset ops, measured 0.58 s of
     pure per-run plan-construction time — more than the query's own
     execution.  One sql() call analyzes the identical tree once
     (measured: 1.31 s -> 0.72 s total, rows byte-identical); the
     physical plan keeps the same 4 combinable per-table profiles."""
-    ev = _sql_ref(spark, sf_dir, "events")
-    li = _sql_ref(spark, sf_dir, "lineitem")
-    orders = _sql_ref(spark, sf_dir, "orders")
-    docs = _sql_ref(spark, sf_dir, "documents")
+    ev = table_view(spark, sf_dir, "events")
+    li = table_view(spark, sf_dir, "lineitem")
+    orders = table_view(spark, sf_dir, "orders")
+    docs = table_view(spark, sf_dir, "documents")
 
     def profile(table: str, keyspace: str, key_sql: str) -> str:
         return f"""
@@ -7806,6 +7748,7 @@ FROM pairs GROUP BY source ORDER BY source
 """
 
 
+@_served
 def _cached_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-corpus winnowing fingerprint ARTIFACT (exploded (doc_id,
     source, nf, f) occurrence table, hot-capped), built once and persisted — the
@@ -7814,40 +7757,37 @@ def _cached_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     build stage is the expensive part (interpreted HOF md5 per char
     position; ~15 s at sf0.1 across 32 cores), so repeat queries must
     not re-scan the corpus."""
-    key = ("winnow-fps", sf_dir)
-    if key not in _SERVING_INDEXES:
-        docs = (
-            load_table(spark, sf_dir, "documents")
-            # too-short docs carry no window; dropping them BEFORE the
-            # exchange keeps the rebalance payload minimal (the builder
-            # re-applies the same filter as a no-op)
-            .filter(F.length("text") >= 17)
-            # spread the md5-per-position HOF stage across all cores:
-            # the source is one small parquet file locally (one input
-            # split).  This IS an extra exchange, but it is in the
-            # one-time artifact build (rows are pre-explode and tiny);
-            # at real scan widths the scan already has enough splits
-            # and the exchange just rebalances them
-            .repartition(spark.sparkContext.defaultParallelism)
+    docs = (
+        load_table(spark, sf_dir, "documents")
+        # too-short docs carry no window; dropping them BEFORE the
+        # exchange keeps the rebalance payload minimal (the builder
+        # re-applies the same filter as a no-op)
+        .filter(F.length("text") >= 17)
+        # spread the md5-per-position HOF stage across all cores:
+        # the source is one small parquet file locally (one input
+        # split).  This IS an extra exchange, but it is in the
+        # one-time artifact build (rows are pre-explode and tiny);
+        # at real scan widths the scan already has enough splits
+        # and the exchange just rebalances them
+        .repartition(spark.sparkContext.defaultParallelism)
+    )
+    # shared builders (operators/dedup.py — the streaming upkeep
+    # derives the identical rows per micro-batch).  fp is persisted
+    # because size + explode BOTH reference fps: un-persisted,
+    # CollapseProject inlines the whole HOF chain into each (2x the
+    # md5/winnow work — measured 417 s vs ~210 s at 500k docs).
+    # The df > 32 hot cap is applied at BUILD time; nf keeps the
+    # doc's FULL fingerprint count so containment denominators stay
+    # honest (rationale on dedup.winnow_hot_cap).
+    fp = dedup_mod.winnow_fingerprints(docs, k=12, w=6).persist()
+    fp.count()
+    kept = _artifact(
+        dedup_mod.winnow_hot_cap(
+            dedup_mod.winnow_occurrences(fp), max_df=32
         )
-        # shared builders (operators/dedup.py — the streaming upkeep
-        # derives the identical rows per micro-batch).  fp is persisted
-        # because size + explode BOTH reference fps: un-persisted,
-        # CollapseProject inlines the whole HOF chain into each (2x the
-        # md5/winnow work — measured 417 s vs ~210 s at 500k docs).
-        # The df > 32 hot cap is applied at BUILD time; nf keeps the
-        # doc's FULL fingerprint count so containment denominators stay
-        # honest (rationale on dedup.winnow_hot_cap).
-        fp = dedup_mod.winnow_fingerprints(docs, k=12, w=6).persist()
-        fp.count()
-        kept = _artifact(
-            dedup_mod.winnow_hot_cap(
-                dedup_mod.winnow_occurrences(fp), max_df=32
-            )
-        )
-        fp.unpersist()
-        _SERVING_INDEXES[key] = kept
-    return _SERVING_INDEXES[key]
+    )
+    fp.unpersist()
+    return kept
 
 
 @register("winnow_fingerprint_pairs", _WINNOW_ORACLE)
@@ -7979,6 +7919,7 @@ GROUP BY source ORDER BY source
 """
 
 
+@_served
 def _cached_xsub_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Positional k-gram occurrence ARTIFACT (doc_id, source, pos, h),
     persisted once per sf_dir — the index side of exact-substring dedup
@@ -7991,26 +7932,22 @@ def _cached_xsub_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
     real text are unique), the df cap is the viral-boilerplate policy
     — the winnow artifact applies its cap at build for the same
     reason."""
-    key = ("xsub-grams", sf_dir)
-    if key not in _SERVING_INDEXES:
-        from vector_database_api_spark.operators.dedup import (
-            kgram_positions,
-            prune_for_pairing,
-        )
+    from vector_database_api_spark.operators.dedup import (
+        kgram_positions,
+        prune_for_pairing,
+    )
 
-        docs = (
-            load_table(spark, sf_dir, "documents")
-            .select("doc_id", "source", "text")
-            # one local parquet file = one input split: spread the
-            # md5-per-position stage across all cores (same rationale
-            # as the winnow artifact build)
-            .repartition(spark.sparkContext.defaultParallelism)
-        )
-        g = _artifact(
-            prune_for_pairing(kgram_positions(docs, k=_XSUB_K), _XSUB_DF)
-        )
-        _SERVING_INDEXES[key] = g
-    return _SERVING_INDEXES[key]
+    docs = (
+        load_table(spark, sf_dir, "documents")
+        .select("doc_id", "source", "text")
+        # one local parquet file = one input split: spread the
+        # md5-per-position stage across all cores (same rationale
+        # as the winnow artifact build)
+        .repartition(spark.sparkContext.defaultParallelism)
+    )
+    return _artifact(
+        prune_for_pairing(kgram_positions(docs, k=_XSUB_K), _XSUB_DF)
+    )
 
 
 @register("exact_substring_dedup_stats", _XSUB_ORACLE)
@@ -8250,8 +8187,7 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # built from ONE persisted pass over the bigram fact, served from
     # the per-corpus cache on every later call; totals are derived from
     # the 1024-row count tables, not from extra corpus scans
-    dsir_key = ("dsir-lm", sf_dir)
-    if dsir_key not in _SERVING_INDEXES:
+    def build_dsir():
         fact_p = _artifact(fact)
         tgt_a = _artifact(
             fact_p.filter(F.col("lang") == "en")
@@ -8264,9 +8200,10 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the featurized fact IS an artifact too (the DSIR paper
         # featurizes the corpus once and scores from the feature file):
         # keeping it persisted removes the per-call bigram re-hash
-        # (md5 per occurrence) from every later scoring pass (r8)
-        _SERVING_INDEXES[dsir_key] = (tgt_a, raw_a, fact_p)
-    tgt, raw, fact = _SERVING_INDEXES[dsir_key]
+        # (md5 per occurrence) from every later scoring pass
+        return (tgt_a, raw_a, fact_p)
+
+    tgt, raw, fact = _STORE.get((spark, "dsir-lm", sf_dir, ()), build_dsir)
     nt = tgt.agg(F.sum("ct").alias("n_t"))
     nr = raw.agg(F.sum("cr").alias("n_r"))
     lw = F.log(
@@ -8319,13 +8256,12 @@ def bpe_tokenize_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     outgrows broadcast) and a map-side-combinable per-source rollup.
     Integer-exact everywhere; the chars/token ratio is one IEEE division
     of exact counts (hash-safe)."""
-    key = ("bpe-reps", sf_dir)
-    if key not in _SERVING_INDEXES:
-        reps = _artifact(
+    reps = _STORE.get(
+        (spark, "bpe-reps", sf_dir, ()),
+        lambda: _artifact(
             bpe_mod.bpe_final_reps(_cached_bpe_wf(spark, sf_dir), rounds=3)
-        )
-        _SERVING_INDEXES[key] = reps
-    reps = _SERVING_INDEXES[key]
+        ),
+    )
     nsym = reps.select(
         "word",
         F.length("word").alias("n_chars"),
@@ -8858,6 +8794,7 @@ def _bm25_score(base: DataFrame, stats: DataFrame) -> DataFrame:
     )
 
 
+@_served
 def _cached_bm25_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 5-scalar BM25 statistics row, persisted once per sf_dir — the
     statistics artifact a keyword engine maintains next to its postings
@@ -8865,13 +8802,9 @@ def _cached_bm25_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same statistics fresh under ingest; deterministic, so the oracle
     gate is unaffected).  Serving a query then costs ONE corpus scan
     (score + top-k) instead of two (stats pass + scoring pass)."""
-    key = ("bm25-stats", sf_dir)
-    if key not in _SERVING_INDEXES:
-        stats = _artifact(
-            _bm25_stats(_bm25_base(load_table(spark, sf_dir, "documents")))
-        )
-        _SERVING_INDEXES[key] = stats
-    return _SERVING_INDEXES[key]
+    return _artifact(
+        _bm25_stats(_bm25_base(load_table(spark, sf_dir, "documents")))
+    )
 
 
 def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8889,6 +8822,7 @@ def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_served
 def _cached_bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SCORED-CORPUS artifact for the fixed request {dup, vector,
     hash}: (doc_id, dl, tf_*, bm25) for every hitting doc, materialized
@@ -8905,10 +8839,7 @@ def _cached_bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     `bm25_postings_topk` (same oracle), and that pair existing is the
     proof that scan-serving == index-serving bit-exactly — which is
     also the hash proof that this artifact changes no reader's values."""
-    key = ("bm25-scored", sf_dir)
-    if key not in _SERVING_INDEXES:
-        _SERVING_INDEXES[key] = _artifact(_bm25_scored(spark, sf_dir))
-    return _SERVING_INDEXES[key]
+    return _artifact(_bm25_scored(spark, sf_dir))
 
 
 def _bm25_scored_docs(docs: DataFrame) -> DataFrame:
@@ -8943,6 +8874,7 @@ def bm25_keyword_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_served
 def _cached_bm25_postings(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
@@ -8955,15 +8887,12 @@ def _cached_bm25_postings(
     statistics half fresh under ingest)."""
     from vector_database_api_spark.operators import bm25 as bm25_ops
 
-    key = ("bm25-postings", sf_dir)
-    if key not in _SERVING_INDEXES:
-        postings, doclens, _ = bm25_ops.build_bm25_index(
-            load_table(spark, sf_dir, "documents"), id_col="doc_id"
-        )
-        postings = _artifact(postings)
-        doclens = _artifact(doclens)
-        _SERVING_INDEXES[key] = (postings, doclens)
-    return _SERVING_INDEXES[key]
+    postings, doclens, _ = bm25_ops.build_bm25_index(
+        load_table(spark, sf_dir, "documents"), id_col="doc_id"
+    )
+    postings = _artifact(postings)
+    doclens = _artifact(doclens)
+    return (postings, doclens)
 
 
 @register("bm25_postings_topk", _BM25_ORACLE)
@@ -8983,7 +8912,7 @@ def bm25_postings_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     doclens join at realistic selectivities."""
     # one sql() string over the postings/doclens artifacts with the
     # statistics scalars bound as literals (r11, guide §5 — the
-    # _sql_ref / _stats_literal_cols rationale); same pivot-equivalent
+    # table_view / _stats_literal_cols rationale); same pivot-equivalent
     # conditional aggregation and the same _BM25_SUM text as always
     return spark.sql(f"""
         SELECT doc_id, dl, {", ".join(f"tf_{t}" for t in _BM25_TERMS)},
@@ -9001,9 +8930,8 @@ def _postings_scored_sql(spark: SparkSession, sf_dir: str) -> str:
     ``sum per term + coalesce 0`` is the equivalent conditional
     aggregation; statistics bind as exact literals
     (_stats_literal_cols)."""
-    postings, doclens = _cached_bm25_postings(spark, sf_dir)
-    p = _sql_ref_df(postings, "_postings_art")
-    dlv = _sql_ref_df(doclens, "_doclens_art")
+    p = _cached_bm25_postings.view(spark, sf_dir, part=0)
+    dlv = _cached_bm25_postings.view(spark, sf_dir, part=1)
     stats = _stats_literal_cols(_cached_stats_row(spark, sf_dir, "bm25-stats"))
     terms_in = ", ".join(f"'{t}'" for t in _BM25_TERMS)
     tf_cols = ", ".join(
@@ -9095,26 +9023,23 @@ ORDER BY ql DESC, doc_id LIMIT 10
 """
 
 
+@_served
 def _cached_ql_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1-row (total_tokens, cf_dup, cf_vector, cf_hash): the collection
     LANGUAGE MODEL — the statistics artifact Dirichlet-QL scoring reads
     next to the BM25 stats row (both are combinable aggregates, both
     maintained by the same streaming partial-stats pattern)."""
-    key = ("ql-stats", sf_dir)
-    if key not in _SERVING_INDEXES:
-        qstats = (
-            _bm25_base(load_table(spark, sf_dir, "documents"))
-            .agg(
-                F.sum("dl").cast("long").alias("total_tokens"),
-                *[
-                    F.sum(f"tf_{t}").cast("long").alias(f"cf_{t}")
-                    for t in _BM25_TERMS
-                ],
-            )
+    qstats = (
+        _bm25_base(load_table(spark, sf_dir, "documents"))
+        .agg(
+            F.sum("dl").cast("long").alias("total_tokens"),
+            *[
+                F.sum(f"tf_{t}").cast("long").alias(f"cf_{t}")
+                for t in _BM25_TERMS
+            ],
         )
-        qstats = _artifact(qstats)
-        _SERVING_INDEXES[key] = qstats
-    return _SERVING_INDEXES[key]
+    )
+    return _artifact(qstats)
 
 
 @register("ql_dirichlet_topk", _QL_ORACLE)
@@ -9194,7 +9119,7 @@ def _ltr_kw_leg(spark: SparkSession, sf_dir: str) -> DataFrame:
     factor behind ltr_feature_matrix's 2.9-3.5 anchor ratio).
     Audited via AUDIT_SUBPLANS (the query proper collects it).
 
-    Built as ONE sql() string since r11 (guide §5, the _sql_ref
+    Built as ONE sql() string since r11 (guide §5, the table_view
     rationale): the chained form staged ~10 eagerly-analyzed Dataset
     ops per request.  Shares `_postings_scored_sql` with
     `bm25_postings_topk` — same pivot-equivalent aggregation, same
@@ -9205,23 +9130,20 @@ def _ltr_kw_leg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """)
 
 
+@_served
 def _cached_doc_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document-scoped embeddings (vec_id, embedding) — the VECTOR
     STORE artifact a served dense retriever reads per query instead of
     re-reading parquet and re-running the doc-scope semi-join per call
     (r8: the per-call rebuild was half of ltr_feature_matrix's dense
     leg cost).  Persisted once per sf_dir like every serving index."""
-    key = ("ltr-doc-embeddings", sf_dir)
-    if key not in _SERVING_INDEXES:
-        docs = load_table(spark, sf_dir, "documents")
-        emb = load_table(spark, sf_dir, "embeddings").join(
-            docs.select(F.col("doc_id").alias("vec_id")),
-            "vec_id",
-            "left_semi",
-        )
-        emb = _artifact(emb)
-        _SERVING_INDEXES[key] = emb
-    return _SERVING_INDEXES[key]
+    docs = load_table(spark, sf_dir, "documents")
+    emb = load_table(spark, sf_dir, "embeddings").join(
+        docs.select(F.col("doc_id").alias("vec_id")),
+        "vec_id",
+        "left_semi",
+    )
+    return _artifact(emb)
 
 
 def _ltr_cos_leg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9229,8 +9151,8 @@ def _ltr_cos_leg(spark: SparkSession, sf_dir: str) -> DataFrame:
     artifact.  Audited via AUDIT_SUBPLANS.  One sql() string since r11
     (guide §5); cosine is the bit-exact SQL-text twin
     (functions/vector.py::cosine_similarity_sql)."""
-    de = _sql_ref_df(_cached_doc_embeddings(spark, sf_dir), "_ltr_docemb")
-    emb = _sql_ref(spark, sf_dir, "embeddings")
+    de = _cached_doc_embeddings.view(spark, sf_dir)
+    emb = table_view(spark, sf_dir, "embeddings")
     return spark.sql(f"""
         SELECT doc_id FROM (
           SELECT /*+ BROADCAST(q) */ vec_id AS doc_id,
@@ -9274,19 +9196,21 @@ def ltr_feature_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         _ltr_kw_leg(spark, sf_dir), _ltr_cos_leg(spark, sf_dir)
     )
     ids = sorted({r["doc_id"] for r in kw_ids} | {r["doc_id"] for r in cos_ids})
-    # the pool job as ONE sql() string (r11, guide §5 / _sql_ref): the
+    # the pool job as ONE sql() string (r11, guide §5 / table_view): the
     # chained form's ~10 Dataset ops paid 0.69-0.89 s of pure per-run
     # analysis (the r10 bisection); identical staging structure — the
     # token array and tf columns are let-bound in nested subselects
     # exactly as the staged selects bound them — identical expression
     # text (_BM25_SUM/_QL_SUM verbatim, cosine via its bit-exact SQL
     # twin), so every double matches and the oracle hash is unchanged.
-    docs = _sql_ref(spark, sf_dir, "documents")
-    emb = _sql_ref(spark, sf_dir, "embeddings")
+    docs = table_view(spark, sf_dir, "documents")
+    emb = table_view(spark, sf_dir, "embeddings")
     stats = _stats_literal_cols(
         _cached_stats_row(spark, sf_dir, "bm25-stats")
     ) + ", " + _stats_literal_cols(_cached_stats_row(spark, sf_dir, "ql-stats"))
-    id_list = ", ".join(str(i) for i in ids)
+    # an empty pool (empty corpus) renders IN (NULL): 0 rows, not a
+    # ParseException on IN ()
+    id_list = ", ".join(str(i) for i in ids) or "NULL"
     tf_stage = ", ".join(
         f"CAST(size(filter(_toks, x -> x = '{t}')) AS BIGINT) AS tf_{t}"
         for t in _BM25_TERMS
@@ -9367,43 +9291,40 @@ ORDER BY any_value(d.best) DESC, d.doc_id LIMIT 10
 """
 
 
+@_served
 def _cached_maxp_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, s, dl, tf_*) per passage window — the chunk-level scoring
     artifact of the maxP query, persisted once per sf_dir (the chunk
     expansion and per-chunk term counts are the expensive stage; the
     stats aggregate and scoring are derivations over it)."""
-    key = ("maxp-chunks", sf_dir)
-    if key not in _SERVING_INDEXES:
-        toks = (
-            load_table(spark, sf_dir, "documents")
-            .filter(F.col("text").isNotNull())
-            .select(
-                "doc_id", F.expr("split(lower(text), ' ', -1)").alias("ws")
-            )
+    toks = (
+        load_table(spark, sf_dir, "documents")
+        .filter(F.col("text").isNotNull())
+        .select(
+            "doc_id", F.expr("split(lower(text), ' ', -1)").alias("ws")
         )
-        chunks = toks.select(
-            "doc_id",
-            F.explode(
-                F.expr(f"sequence(1, size(ws), {_MAXP_STRIDE})")
-            ).alias("s"),
-            "ws",
-        ).select(
-            "doc_id", "s", F.expr(f"slice(ws, s, {_MAXP_WIN})").alias("cw")
+    )
+    chunks = toks.select(
+        "doc_id",
+        F.explode(
+            F.expr(f"sequence(1, size(ws), {_MAXP_STRIDE})")
+        ).alias("s"),
+        "ws",
+    ).select(
+        "doc_id", "s", F.expr(f"slice(ws, s, {_MAXP_WIN})").alias("cw")
+    )
+    cols = [
+        F.col("doc_id"),
+        F.col("s"),
+        F.size("cw").cast("long").alias("dl"),
+    ]
+    for t in _BM25_TERMS:
+        cols.append(
+            F.expr(f"size(filter(cw, x -> x = '{t}'))")
+            .cast("long")
+            .alias(f"tf_{t}")
         )
-        cols = [
-            F.col("doc_id"),
-            F.col("s"),
-            F.size("cw").cast("long").alias("dl"),
-        ]
-        for t in _BM25_TERMS:
-            cols.append(
-                F.expr(f"size(filter(cw, x -> x = '{t}'))")
-                .cast("long")
-                .alias(f"tf_{t}")
-            )
-        base = _artifact(chunks.select(*cols))
-        _SERVING_INDEXES[key] = base
-    return _SERVING_INDEXES[key]
+    return _artifact(chunks.select(*cols))
 
 
 @register("maxp_passage_topk", _MAXP_ORACLE)
@@ -10516,21 +10437,18 @@ def rm3_expanded_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_served
 def _cached_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(term, df) corpus vocabulary with document frequency — the
     dictionary a keyword engine keeps next to its postings (it IS the
     distinct-term projection of the postings artifact: vocab-sized,
     not corpus-sized).  Persisted once per sf_dir with the standard
     pinning discipline."""
-    key = ("vocab", sf_dir)
-    if key not in _SERVING_INDEXES:
-        postings, _ = _cached_bm25_postings(spark, sf_dir)
-        vocab = _artifact(
-            postings.groupBy("term")
-            .agg(F.count(F.lit(1)).cast("long").alias("df"))
-        )
-        _SERVING_INDEXES[key] = vocab
-    return _SERVING_INDEXES[key]
+    postings, _ = _cached_bm25_postings(spark, sf_dir)
+    return _artifact(
+        postings.groupBy("term")
+        .agg(F.count(F.lit(1)).cast("long").alias("df"))
+    )
 
 
 _FUZZY_Q = "vectr"  # a typo of "vector"
@@ -10612,6 +10530,7 @@ def fuzzy_term_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_served
 def _cached_bm25_maxscores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1-row (ub_dup, ub_vector, ub_hash): the per-term score UPPER
     BOUND a MaxScore/WAND engine stores next to its postings (Turtle &
@@ -10619,25 +10538,21 @@ def _cached_bm25_maxscores(spark: SparkSession, sf_dir: str) -> DataFrame:
     max BM25 contribution any corpus document yields for the term.
     Build cost is one scoring pass at INDEX time (the artifact
     discipline); query time reads 1 row."""
-    key = ("bm25-maxscores", sf_dir)
-    if key not in _SERVING_INDEXES:
-        scored = (
-            _bm25_base(load_table(spark, sf_dir, "documents"))
-            .crossJoin(F.broadcast(_cached_bm25_stats(spark, sf_dir)))
-            .select(
-                *[
-                    F.expr(_bm25_contrib_sql(t)).alias(f"c_{t}")
-                    for t in _BM25_TERMS
-                ]
-            )
+    scored = (
+        _bm25_base(load_table(spark, sf_dir, "documents"))
+        .crossJoin(F.broadcast(_cached_bm25_stats(spark, sf_dir)))
+        .select(
+            *[
+                F.expr(_bm25_contrib_sql(t)).alias(f"c_{t}")
+                for t in _BM25_TERMS
+            ]
         )
-        ubs = _artifact(
-            scored.agg(
-                *[F.max(f"c_{t}").alias(f"ub_{t}") for t in _BM25_TERMS]
-            )
+    )
+    return _artifact(
+        scored.agg(
+            *[F.max(f"c_{t}").alias(f"ub_{t}") for t in _BM25_TERMS]
         )
-        _SERVING_INDEXES[key] = ubs
-    return _SERVING_INDEXES[key]
+    )
 
 
 @register("bm25_maxscore_topk", _BM25_ORACLE)
@@ -10708,6 +10623,7 @@ def bm25_maxscore_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BMW_BLOCK = 64  # docs per contiguous doc-id block (the skip-pointer granule)
 
 
+@_served
 def _cached_bm25_blockmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(block, bm_dup, bm_vector, bm_hash): per-(doc-id-block, term)
     score upper bounds — the BLOCK-MAX postings metadata of Ding & Suel
@@ -10722,25 +10638,21 @@ def _cached_bm25_blockmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     serving time only the query terms' columns are read.  Block = floor
     (doc_id / width): contiguous ranges, exactly the layout a posting
     list's skip pointers index."""
-    key = ("bm25-blockmax", sf_dir)
-    if key not in _SERVING_INDEXES:
-        scored = (
-            _bm25_base(load_table(spark, sf_dir, "documents"))
-            .crossJoin(F.broadcast(_cached_bm25_stats(spark, sf_dir)))
-            .select(
-                F.floor(F.col("doc_id") / _BMW_BLOCK).alias("block"),
-                *[
-                    F.expr(_bm25_contrib_sql(t)).alias(f"c_{t}")
-                    for t in _BM25_TERMS
-                ],
-            )
+    scored = (
+        _bm25_base(load_table(spark, sf_dir, "documents"))
+        .crossJoin(F.broadcast(_cached_bm25_stats(spark, sf_dir)))
+        .select(
+            F.floor(F.col("doc_id") / _BMW_BLOCK).alias("block"),
+            *[
+                F.expr(_bm25_contrib_sql(t)).alias(f"c_{t}")
+                for t in _BM25_TERMS
+            ],
         )
-        bm = _artifact(
-            scored.groupBy("block")
-            .agg(*[F.max(f"c_{t}").alias(f"bm_{t}") for t in _BM25_TERMS])
-        )
-        _SERVING_INDEXES[key] = bm
-    return _SERVING_INDEXES[key]
+    )
+    return _artifact(
+        scored.groupBy("block")
+        .agg(*[F.max(f"c_{t}").alias(f"bm_{t}") for t in _BM25_TERMS])
+    )
 
 
 @register("bm25_blockmax_topk", _BM25_ORACLE)
@@ -11323,6 +11235,7 @@ def _bm25_batch_frames(
     return scored, run
 
 
+@_served
 def _cached_batch_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The materialized batch RUN (qid, doc_id, bm25, rel, rank<=20 or
     NULL) — persisted once per sf_dir, the exact analogue of the TREC
@@ -11334,15 +11247,12 @@ def _cached_batch_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     evaluation metric then serve from the stored run without
     re-scoring, which is how a nightly eval over a 10k-query log
     actually runs (score once, evaluate many)."""
-    key = ("bm25-batch-run", sf_dir)
-    if key not in _SERVING_INDEXES:
-        scored, run_df = _bm25_batch_frames(
-            spark, sf_dir, persist_scored=True
-        )
-        run = _artifact(run_df)
-        scored.unpersist()  # the run holds its own materialized rows
-        _SERVING_INDEXES[key] = run
-    return _SERVING_INDEXES[key]
+    scored, run_df = _bm25_batch_frames(
+        spark, sf_dir, persist_scored=True
+    )
+    run = _artifact(run_df)
+    scored.unpersist()  # the run holds its own materialized rows
+    return run
 
 
 _BATCH_TOPK_ORACLE = f"""
@@ -11536,6 +11446,7 @@ def _batch_query_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_served
 def _cached_dense_batch_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The persisted DENSE batch run (qid, doc_id, r_vec<=20) — the
     vector twin of `_cached_batch_run`, shared by the batch hybrid
@@ -11548,12 +11459,9 @@ def _cached_dense_batch_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     <=Q tasks each sorting the corpus at 100 TB.  grouped_topk is
     row-identical to the window (tests/test_skew.py), so the DuckDB
     oracle's windowed form still hash-matches."""
-    dkey = ("dense-batch-run", sf_dir)
-    if dkey not in _SERVING_INDEXES:
-        _SERVING_INDEXES[dkey] = _artifact(
-            _dense_batch_run_build(spark, sf_dir)
-        )
-    return _SERVING_INDEXES[dkey]
+    return _artifact(
+        _dense_batch_run_build(spark, sf_dir)
+    )
 
 
 def _dense_batch_run_build(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11657,7 +11565,13 @@ def hybrid_batch_rrf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors against the embedding store — nothing per-query), so the
     steady-state fusion request touches only <=20-row-per-qid rank
     frames.  No cosmetic final sort: rank identifies order."""
-    # ONE sql() string (r11, guide §5 / _sql_ref).  Shapes unchanged:
+    return spark.sql(_hybrid_batch_rrf_sql(spark, sf_dir))
+
+
+def _hybrid_batch_rrf_sql(spark: SparkSession, sf_dir: str) -> str:
+    """SQL text of `hybrid_batch_rrf_topk`, which
+    `ir_eval_hybrid_metrics` embeds as a subquery."""
+    # ONE sql() string (r11, guide §5 / table_view).  Shapes unchanged:
     # the FULL OUTER on (qid, doc_id) of the two rank frames stays the
     # union + max-per-key aggregation (r10: each side holds at most one
     # row per key — ranks are unique within a leg — so max over
@@ -11667,9 +11581,9 @@ def hybrid_batch_rrf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sorts), and the fused ranking window's input is the <=40-row-
     # per-qid aggregate (WINDOW_BOUNDS declaration).  Double literals
     # are CAST text so nothing parses as DECIMAL.
-    run = _sql_ref_df(_cached_batch_run(spark, sf_dir), "_ltrb_run")
-    vr = _sql_ref_df(_cached_dense_batch_run(spark, sf_dir), "_ltrb_vrun")
-    return spark.sql(f"""
+    run = _cached_batch_run.view(spark, sf_dir)
+    vr = _cached_dense_batch_run.view(spark, sf_dir)
+    return f"""
         WITH fused AS (
           SELECT qid, doc_id, r_kw, r_vec,
                  coalesce(CAST(1.0 AS DOUBLE) / (60 + r_kw),
@@ -11694,7 +11608,7 @@ def hybrid_batch_rrf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                    PARTITION BY qid ORDER BY rrf_raw DESC, doc_id) AS rank
           FROM fused
         ) WHERE rank <= 10
-    """)
+    """
 
 
 _IR_EVAL_HYBRID_ORACLE = f"""
@@ -11759,10 +11673,8 @@ def ir_eval_hybrid_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     # produced it, grade sums see one row per run doc with extra
     # zeros only (integer arithmetic, exact), and HAVING count(rel)
     # replicates the old inner join's "qid must have run rows"."""
-    run = _sql_ref_df(_cached_batch_run(spark, sf_dir), "_ltrb_run")
-    fused = _sql_ref_df(
-        hybrid_batch_rrf_topk(spark, sf_dir), "_ireval_fused"
-    )
+    run = _cached_batch_run.view(spark, sf_dir)
+    fused = f"({_hybrid_batch_rrf_sql(spark, sf_dir)}) fused"
     rel_cols = ", ".join(
         f"max(CASE WHEN rank = {r} THEN coalesce(rel, 0) END) AS rel_{r}"
         for r in range(1, 11)
@@ -11888,7 +11800,7 @@ def ltr_feature_matrix_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     nightly feature-refresh job: runs maintained as artifacts, one
     pool probe proportional to k*Q, never corpus x Q."""
     # ONE sql() string over the two run artifacts + parquet probes
-    # (r11, guide §5 / _sql_ref): the chained form's ~15 Dataset ops
+    # (r11, guide §5 / table_view): the chained form's ~15 Dataset ops
     # measured ~0.5 s of pure per-run plan construction (the r10
     # "analysis floor spread over ~10 ops" bisection).  Shapes are
     # unchanged and stated inline: the full outer on (qid, doc_id) is
@@ -11899,10 +11811,10 @@ def ltr_feature_matrix_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # verdict), and tf_sum is the one-membership-lambda form (r10; each
     # query's terms are distinct so membership == the per-term sum the
     # oracle computes).
-    run = _sql_ref_df(_cached_batch_run(spark, sf_dir), "_ltrb_run")
-    vr = _sql_ref_df(_cached_dense_batch_run(spark, sf_dir), "_ltrb_vrun")
-    docs = _sql_ref(spark, sf_dir, "documents")
-    emb = _sql_ref(spark, sf_dir, "embeddings")
+    run = _cached_batch_run.view(spark, sf_dir)
+    vr = _cached_dense_batch_run.view(spark, sf_dir)
+    docs = table_view(spark, sf_dir, "documents")
+    emb = table_view(spark, sf_dir, "embeddings")
     qterms = "CASE p.qid " + " ".join(
         f"WHEN {qid} THEN array({', '.join(repr(t) for t in ts)})"
         for qid, ts in _BATCH_QUERIES
@@ -12140,20 +12052,19 @@ def more_like_this_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     float sums), TakeOrderedAndProject."""
     postings, doclens = _cached_bm25_postings(spark, sf_dir)
     stats = _cached_bm25_stats(spark, sf_dir).select("n_docs", "avgdl")
-    tv_key = ("mlt-term-vector", sf_dir, _MLT_SEED)
-    if tv_key not in _SERVING_INDEXES:
-        vocab = _cached_vocab(spark, sf_dir)
-        _SERVING_INDEXES[tv_key] = (
+    seed_terms = _STORE.get(
+        (spark, "mlt-term-vector", sf_dir, (_MLT_SEED,)),
+        lambda: (
             postings.filter(F.col("id") == _MLT_SEED)
             .filter(F.length("term") >= 3)
-            .join(F.broadcast(vocab), "term")
+            .join(F.broadcast(_cached_vocab(spark, sf_dir)), "term")
             .crossJoin(F.broadcast(stats.select("n_docs")))
             .select("term", "df", F.expr(_MLT_WT).alias("wt"))
             .orderBy(F.desc("wt"), "term")
             .limit(_MLT_N_TERMS)
             .collect()
-        )
-    seed_terms = _SERVING_INDEXES[tv_key]
+        ),
+    )
     qterms = spark.createDataFrame(
         [(p, r["term"], r["df"]) for p, r in enumerate(seed_terms, 1)],
         "r int, term string, df bigint",
@@ -12288,13 +12199,12 @@ def source_topic_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     within each class, and the oracle compare is order-insensitive."""
     from vector_database_api_spark.operators.skew import grouped_topk
 
-    key = ("ctfidf-topic-model", sf_dir)
-    if key not in _SERVING_INDEXES:
+    def build():
+        from vector_database_api_spark.operators.quality import ctfidf_scores
+
         docs = load_table(spark, sf_dir, "documents").filter(
             F.col("text").isNotNull()
         )
-        from vector_database_api_spark.operators.quality import ctfidf_scores
-
         tc = (
             docs.select(
                 "source",
@@ -12312,8 +12222,9 @@ def source_topic_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
         # batch is an identity of plans
         scored = _artifact(ctfidf_scores(tc, "source"))
         tc.unpersist()
-        _SERVING_INDEXES[key] = scored
-    scored = _SERVING_INDEXES[key]
+        return scored
+
+    scored = _STORE.get((spark, "ctfidf-topic-model", sf_dir, ()), build)
     return grouped_topk(scored, "source", "ctfidf", "term", 5, shards=16).select(
         "source", "rank", "term", F.round("ctfidf", 6).alias("ctfidf")
     )
